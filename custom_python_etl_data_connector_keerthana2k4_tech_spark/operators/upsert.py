@@ -8,10 +8,12 @@ engine pins a deterministic ordering via explicit ``order_by`` columns
 (SURVEY §7 hard part (a)).
 
 Spark-first design:
-- ``upsert_dataframe``: pure DataFrame -> DataFrame merge (window dedup
-  ``row_number() == 1`` over the key, ordered by ``order_by`` desc then a
-  batch-wins-over-existing priority). NULL-key rows bypass dedup and are
-  appended (the reference's insert fallback, :185-187).
+- ``upsert_dataframe``: pure DataFrame -> DataFrame merge in ONE
+  aggregate (``max_by`` over the key, ordered by ``order_by``, then a
+  batch-wins-over-existing priority, then ``tie_break``, then source
+  position). NULL-key rows each get a group of their own, so every one of
+  them is kept (the reference's insert fallback, :185-187) without a
+  second scan of the input.
 - ``upsert_parquet``: materialized table on any Hadoop-compatible FS;
   read-merge-overwrite with a temp-dir swap (no Delta in this image — with
   Delta this is a one-statement ``MERGE INTO``; see ``upsert_delta``).
@@ -28,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _PRIORITY = "__upsert_priority"
-_ROWNUM = "__upsert_rn"
+_POS = "__upsert_pos"
+_SOLO = "__upsert_solo"
+_WINNER = "__upsert_winner"
 
 
 def dedup_last_write_wins(
@@ -39,17 +43,32 @@ def dedup_last_write_wins(
 ) -> DataFrame:
     """Keep one row per key: the last write per ``order_by`` (desc).
 
-    Runs as ``max_by`` over the ordering tuple — a HASH AGGREGATION with
-    map-side partial combine, not a sort-window: each input partition
-    pre-collapses its keys to one candidate row before the shuffle, so
-    the exchange carries (distinct keys x partitions) rows instead of
-    every row, and the reduce side never sorts. Struct comparison puts a
-    NULL field lowest, which under max is exactly the window form's
-    ``desc_nulls_last``; ties on the full ordering tuple resolve
-    arbitrarily in both forms EXCEPT the priority column, which still
-    breaks existing-vs-batch (tests pin equivalence including null order
-    keys). At 100 TB this is the difference between shuffling the table
-    and shuffling its keys.
+    One scan, one shuffle: a single ``max_by`` aggregate with map-side
+    partial combine, not a window and not a keyed/keyless split. Each
+    input partition pre-collapses its keys to one candidate row before
+    the shuffle, so the exchange carries (distinct keys x partitions)
+    rows instead of every row. At 100 TB this is the difference between
+    shuffling the table and shuffling its keys. (Spark plans it as a
+    sort aggregate: a struct buffer rules out the hash aggregate.)
+
+    - **NULL keys.** A row with any NULL key column is the reference's
+      insert fallback (etl_connector.py:185-187): it must survive as is.
+      It gets a unique surrogate group (its source position), so it is
+      alone in its group and wins it; every keyless row is kept, exact
+      duplicates included, and the input is read once.
+    - **Ordering.** ``order_by`` then ``priority_col``, compared as one
+      struct. Struct comparison puts a NULL field lowest, which under max
+      is exactly the window form's ``desc_nulls_last`` (tests pin the
+      equivalence, null order keys included).
+    - **Full ties** go to the later source position
+      (``monotonically_increasing_id`` = (partitionId << 33) + offset:
+      source order for file splits, page-range REST partitions and
+      unions, whose partitions are numbered child by child). That is
+      the reference's loop order, where the last ``replace_one`` lands
+      (:176-181), so the result is deterministic.
+
+    Batch DataFrames only: Spark rejects ``monotonically_increasing_id``
+    on a streaming frame (``foreachBatch`` hands its sink a batch frame).
     """
     keys = [key] if isinstance(key, str) else list(key)
     ordering = [F.col(c) for c in order_by]
@@ -62,19 +81,18 @@ def dedup_last_write_wins(
     for k in keys:
         null_key = null_key | F.col(k).isNull()
 
-    keyed = df.filter(~null_key)
-    keyless = df.filter(null_key)  # insert fallback, etl_connector.py:185-187
     cols = df.columns
-    deduped = (
-        keyed.groupBy(*keys)
+    return (
+        df.withColumn(_POS, F.monotonically_increasing_id())
+        .groupBy(*keys, F.when(null_key, F.col(_POS)).alias(_SOLO))
         .agg(
             F.max_by(
-                F.struct(*[F.col(c) for c in cols]), F.struct(*ordering)
-            ).alias(_ROWNUM)
+                F.struct(*[F.col(c) for c in cols]),
+                F.struct(*ordering, F.col(_POS)),
+            ).alias(_WINNER)
         )
-        .select(*[F.col(f"{_ROWNUM}.{c}").alias(c) for c in cols])
+        .select(*[F.col(f"{_WINNER}.{c}").alias(c) for c in cols])
     )
-    return deduped.unionByName(keyless)
 
 
 def upsert_dataframe(
@@ -82,21 +100,25 @@ def upsert_dataframe(
     batch: DataFrame,
     key: str | list[str],
     order_by: list[str],
+    tie_break: list[str] | None = None,
 ) -> DataFrame:
     """Merge ``batch`` into ``existing`` with last-write-wins on ``key``.
 
     Ties on ``order_by`` resolve in favor of the incoming batch (the
     reference's replace_one semantics: a re-sent identical record replaces,
-    etl_connector.py:181).
+    etl_connector.py:181). ``tie_break`` columns order what is still tied
+    after that priority — in practice rows of the same batch, since
+    ``existing`` holds one row per key — and rows tied on everything go
+    to the later source position. So a caller folds its in-batch
+    collapse into this one aggregate instead of deduping the batch first.
     """
     tagged_batch = batch.withColumn(_PRIORITY, F.lit(1))
     if existing is None:
         merged = tagged_batch
     else:
         merged = existing.withColumn(_PRIORITY, F.lit(0)).unionByName(tagged_batch)
-    return dedup_last_write_wins(merged, key, order_by, priority_col=_PRIORITY).drop(
-        _PRIORITY
-    )
+    ordering = [*order_by, _PRIORITY, *(tie_break or [])]
+    return dedup_last_write_wins(merged, key, ordering).drop(_PRIORITY)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -145,6 +167,7 @@ def upsert_parquet(
     order_by: list[str],
     partition_by: list[str] | None = None,
     dead_letter_dir: str | None = None,
+    tie_break: list[str] | None = None,
 ) -> None:
     """Keyed upsert into a parquet table at ``path`` (create if absent).
 
@@ -166,30 +189,32 @@ def upsert_parquet(
     cannot cast to the target schema are quarantined there (JSON, appended)
     and the write proceeds with the rest — the reference's per-doc
     swallow-log-continue (etl_connector.py:182-191) as a frame, not a log.
+
+    ``tie_break`` is passed to ``upsert_dataframe``: the batch's own
+    duplicates collapse in the same aggregate as the merge.
     """
     fs, jpath = _hadoop_fs(spark, path)
-    exists = fs.exists(jpath)
+    # one read of the target: each schema-less read starts a footer job
+    target = spark.read.parquet(path) if fs.exists(jpath) else None
 
-    if dead_letter_dir is not None and exists:
-        target_schema = spark.read.parquet(path).schema
-        batch, bad = sink_quarantine(batch, target_schema)
+    if dead_letter_dir is not None and target is not None:
+        batch, bad = sink_quarantine(batch, target.schema)
         bad = bad.persist()
         if not bad.isEmpty():
             bad.write.mode("append").json(dead_letter_dir)
 
     if not partition_by:
-        existing = spark.read.parquet(path) if exists else None
-        merged = upsert_dataframe(existing, batch, key, order_by)
+        merged = upsert_dataframe(target, batch, key, order_by, tie_break)
         tmp = f"{path}__tmp_{uuid.uuid4().hex}"
         merged.write.mode("overwrite").parquet(tmp)
         _, jtmp = _hadoop_fs(spark, tmp)
-        if exists:
+        if target is not None:
             fs.delete(jpath, True)
         fs.rename(jtmp, jpath)
         return
 
-    if not exists:
-        upsert_dataframe(None, batch, key, order_by).write.partitionBy(
+    if target is None:
+        upsert_dataframe(None, batch, key, order_by, tie_break).write.partitionBy(
             *partition_by
         ).mode("overwrite").parquet(path)
         return
@@ -197,10 +222,8 @@ def upsert_parquet(
     # Merge only the touched partitions: existing rows are pre-filtered with
     # a partition-pruned semi join (the scan reads only those directories).
     touched = batch.select(*partition_by).distinct()
-    existing = spark.read.parquet(path).join(
-        F.broadcast(touched), partition_by, "left_semi"
-    )
-    merged = upsert_dataframe(existing, batch, key, order_by)
+    existing = target.join(F.broadcast(touched), partition_by, "left_semi")
+    merged = upsert_dataframe(existing, batch, key, order_by, tie_break)
     tmp = f"{path}__tmp_{uuid.uuid4().hex}"
     merged.write.partitionBy(*partition_by).mode("overwrite").parquet(tmp)
 
@@ -327,7 +350,7 @@ def apply_cdc(
     deletes the reference's Mongo sink expresses as remove); a key whose
     winning record is a delete disappears from the output. This is the
     Delta ``MERGE WHEN MATCHED [AND ...] THEN UPDATE/DELETE`` shape in
-    vanilla DataFrame algebra: one union + one window shuffle on the key,
+    vanilla DataFrame algebra: one union + one aggregate shuffle on the key,
     no per-key probing, so a 100 TB table merges a change feed in a single
     pass.
     """

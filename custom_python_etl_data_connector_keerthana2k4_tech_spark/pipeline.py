@@ -154,33 +154,28 @@ def run_batch(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(valid_predicate().cast("long")).alias("n_valid"),
     )
-    # Within-run collapse first. The reference loops the batch and
-    # replace_one's each record, so whichever duplicate its iterator
+    # One aggregate does both collapses. The reference loops the batch
+    # and replace_one's each record, so whichever duplicate its iterator
     # happens to visit last lands (etl_connector.py:176-181) — loop
     # position is not a well-defined concept once the batch is a shuffled
     # distributed frame, so the engine pins a deterministic,
-    # order-independent tie-break instead (SURVEY §7 hard part (a)):
-    # record recency (``pulse_modified``) wins within a run, and exact
-    # duplicates fall back to source position (monotonically_increasing_id
-    # = (partitionId << 33) + offset — source order for page-range REST
-    # partitions and file splits). Collapsing before the upsert keeps the
-    # position column out of the table schema.
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import dedup_last_write_wins
-
-    pos = "_src_pos"
-    valid = (
-        observed.filter(valid_predicate())
-        .withColumn(pos, F.monotonically_increasing_id())
-    )
-    valid = dedup_last_write_wins(
-        valid, "pulse_id", ["ingestion_timestamp", "pulse_modified", pos]
-    ).drop(pos)
+    # order-independent tie-break instead (SURVEY §7 hard part (a)). The
+    # upsert orders by (ingestion_timestamp, batch-over-existing priority,
+    # pulse_modified, source position): every row of one batch carries
+    # the same run timestamp and priority, so within a run record recency
+    # (``pulse_modified``) wins and exact duplicates fall back to source
+    # position (source order for page-range REST partitions and file
+    # splits), while against the stored table the newer run wins and a
+    # re-run with the same ``run_ts`` replaces (batch wins ties). The
+    # position column lives inside the upsert and never reaches the
+    # table schema. So the source is read once and shuffled once.
     upsert_parquet(
         spark,
-        valid,
+        observed.filter(valid_predicate()),
         target_path,
         key="pulse_id",
         order_by=["ingestion_timestamp"],
+        tie_break=["pulse_modified"],
     )
     metrics = obs.get
     n_total = int(metrics["n_total"])

@@ -37,6 +37,7 @@ import time
 import urllib.error
 import urllib.parse
 import urllib.request
+import weakref
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -400,12 +401,22 @@ class RestDataSource(DataSource):
         return RestSimpleStreamReader(self.options)
 
 
+_REGISTERED_SESSIONS: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
 def register_rest_source(spark: SparkSession) -> None:
-    """Register the format (ships the package to Python workers first)."""
+    """Register the format (ships the package to Python workers first).
+
+    Once per session: registering again replaces the previous
+    registration and logs a DataSourceManager warning on every batch.
+    """
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import ship_package
 
+    if spark in _REGISTERED_SESSIONS:
+        return
     ship_package(spark)
     spark.dataSource.register(RestDataSource)
+    _REGISTERED_SESSIONS.add(spark)
 
 
 def pulses_df(

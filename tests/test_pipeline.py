@@ -122,6 +122,70 @@ def test_run_batch_idempotent(spark, tmp_path):
     assert out2.filter("pulse_id is null").count() == 4
 
 
+def _pulses(spark, rows):
+    """Raw frame of (pulse id, modified, name) records."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.otx_fixture import RAW_PULSE_SCHEMA
+
+    return spark.createDataFrame(
+        [
+            {"id": pid, "pulse_info": {"id": pid, "name": name, "modified": mod}}
+            for pid, mod, name in rows
+        ],
+        schema=RAW_PULSE_SCHEMA,
+    )
+
+
+def _stored(spark, target):
+    return sorted(
+        (r.pulse_id or "", r.pulse_modified or "", r.pulse_name)
+        for r in spark.read.parquet(target).collect()
+    )
+
+
+def test_run_batch_in_batch_collapse(spark, tmp_path):
+    """Within one batch the later pulse_modified wins and exact duplicates
+    collapse to one row; NULL-key and empty-key rows are all kept, exact
+    duplicates included (insert fallback, etl_connector.py:185-187)."""
+    target = str(tmp_path / "t")
+    batch = _pulses(
+        spark,
+        [
+            ("k", "2024-01-01", "a"),
+            ("k", "2024-01-03", "c"),
+            ("k", "2024-01-02", "b"),
+            ("d", "2024-01-01", "dup"),
+            ("d", "2024-01-01", "dup"),
+            (None, "2024-01-01", "orphan"),
+            (None, "2024-01-01", "orphan"),
+            ("", "2024-01-01", "falsy"),
+            ("", "2024-01-01", "falsy"),
+        ],
+    )
+    m = run_batch(spark, batch, CFG, target, run_ts=RUN_TS)
+    assert m["records_upserted"] == 9
+    assert _stored(spark, target) == [
+        ("", "2024-01-01", "falsy"),
+        ("", "2024-01-01", "falsy"),
+        ("", "2024-01-01", "orphan"),
+        ("", "2024-01-01", "orphan"),
+        ("d", "2024-01-01", "dup"),
+        ("k", "2024-01-03", "c"),
+    ]
+
+
+def test_run_batch_same_run_ts_batch_wins_tie(spark, tmp_path):
+    """A re-run with the same run_ts replaces the stored row even when its
+    pulse_modified is older (batch wins ties, replace_one :181); a run
+    with an older run_ts loses to the stored row."""
+    target = str(tmp_path / "t")
+    run_batch(spark, _pulses(spark, [("k", "2024-02-01", "first")]), CFG, target, run_ts=RUN_TS)
+    run_batch(spark, _pulses(spark, [("k", "2024-01-01", "rerun")]), CFG, target, run_ts=RUN_TS)
+    assert _stored(spark, target) == [("k", "2024-01-01", "rerun")]
+    older = RUN_TS - dt.timedelta(days=1)
+    run_batch(spark, _pulses(spark, [("k", "2024-03-01", "stale")]), CFG, target, run_ts=older)
+    assert _stored(spark, target) == [("k", "2024-01-01", "rerun")]
+
+
 def test_config_fail_fast():
     """Missing API key -> fail fast (etl_connector.py:33-34)."""
     with pytest.raises(ConfigError):

@@ -233,6 +233,37 @@ def test_rest_to_pipeline_end_to_end(spark, stub_server, tmp_path):
     assert keyed.count() == keyed.select("pulse_id").distinct().count()
 
 
+def test_run_batch_fetches_each_page_once(spark, stub_server, tmp_path):
+    """One ETL batch reads its source once: every page is requested
+    exactly once, so a live API is seen as one snapshot (fetch
+    amplification 1.0), also when the target already exists."""
+    import datetime as dt
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import run_batch
+
+    base, state = stub_server
+    items = [{"id": f"p-{i}", "pulse_info": {"id": f"p-{i}"}} for i in range(9)]
+    # four full pages of 2, then a short page of 1
+    state.pages = {p: {"results": items[2 * (p - 1) : 2 * p]} for p in range(1, 6)}
+    cfg = PipelineConfig(api_key="k", base_url=base, connector_name="t", city="")
+    target = str(tmp_path / "pulses")
+    for day in (1, 2):
+        state.requests.clear()
+        raw_df = pulses_df(
+            spark, base, RAW_PULSE_SCHEMA, per_page="2", max_pages="6",
+            pages_per_partition="2", **FAST,
+        )
+        metrics = run_batch(
+            spark, raw_df, cfg, target,
+            run_ts=dt.datetime(2024, 1, day, tzinfo=dt.timezone.utc),
+        )
+        assert metrics["records_seen"] == 9
+        pages = [r["page"] for r in state.requests]
+        assert sorted(pages) == [1, 2, 3, 4, 5]  # one request per page
+    assert spark.read.parquet(target).count() == 9
+
+
 # ---------------------------------------------------------------------------
 # Streaming mode: SimpleDataSourceStreamReader over the same stub
 # ---------------------------------------------------------------------------

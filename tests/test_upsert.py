@@ -59,6 +59,46 @@ def test_dedup_null_order_keys_match_window_form(spark):
     )
 
 
+def test_dedup_keeps_every_keyless_row_with_multiplicity(spark):
+    """Insert fallback (etl_connector.py:185-187): a row with any NULL key
+    column survives as is, exact duplicates included; keyed exact
+    duplicates collapse to one row."""
+    df = spark.createDataFrame(
+        [
+            (None, None, "x", 1),
+            (None, None, "x", 1),  # exact duplicate, all-NULL key
+            (None, "b", "y", 1),
+            (None, "b", "y", 1),  # exact duplicate, partially NULL key
+            ("a", None, "z", 2),
+            ("a", "b", "dup", 1),
+            ("a", "b", "dup", 1),  # exact duplicate, full key
+        ],
+        "k1 string, k2 string, v string, ts long",
+    )
+    out = dedup_last_write_wins(df, ["k1", "k2"], ["ts"])
+    assert sorted(r.v for r in out.collect()) == ["dup", "x", "x", "y", "y", "z"]
+
+
+def test_dedup_full_ties_go_to_later_source_position(spark):
+    """Rows tied on the whole ordering resolve to the later input row,
+    the reference's loop order (the last replace_one lands, :176-181)."""
+    df = _df(spark, [("a", "first", 1), ("a", "second", 1), ("b", "only", 1)])
+    for frame in (df, df.coalesce(1)):  # ties across and within partitions
+        got = {r.k: r.v for r in dedup_last_write_wins(frame, "k", ["ts"]).collect()}
+        assert got == {"a": "second", "b": "only"}
+
+
+def test_dedup_plan_reads_input_once(spark):
+    """One aggregate: no keyed/keyless Union, one leaf (the input is
+    scanned once), one shuffle."""
+    df = _df(spark, [("a", "old", 1), ("a", "new", 2), (None, "x", 1)])
+    qe = dedup_last_write_wins(df, "k", ["ts"])._jdf.queryExecution()
+    optimized = qe.optimizedPlan()
+    assert "Union" not in optimized.toString()
+    assert optimized.collectLeaves().size() == 1
+    assert qe.executedPlan().toString().count("Exchange") == 1
+
+
 def test_upsert_batch_wins_ties(spark):
     """Equal order_by -> incoming batch replaces existing (replace_one, :181)."""
     existing = _df(spark, [("a", "existing", 5)])
